@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -17,6 +19,15 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * Usage: runMain graft.Profile q159_source_scorecard[,q166_...]
   */
 object Profile {
+  /** The operator behind a call stack Spark recorded: its first
+    * graft.* frame past the eager plumbing every chain funnels through
+    * (`Dedup.materialize`, `Par`) and this harness. */
+  private def operatorOf(callStack: String): Option[String] =
+    callStack.linesIterator.map(_.trim).find { f =>
+      f.startsWith("graft.") && !f.startsWith("graft.operators.Dedup$.materialize") &&
+        !f.startsWith("graft.operators.Par") && !f.startsWith("graft.Profile")
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -35,19 +46,39 @@ object Profile {
     val tasks = new AtomicInteger(0)
     val taskTimeMs = new AtomicLong(0L)
     // GRAFT_PROFILE_JOBS=1: additionally print one line per job with its
-    // wall duration and callSite, so a chain's job count decomposes to
-    // the operator calls that submitted them.
+    // wall duration and submitting operator, so a chain's job count
+    // decomposes to the operator calls that submitted them.
     val perJob = sys.env.get("GRAFT_PROFILE_JOBS").contains("1")
+    val perStage = sys.env.get("GRAFT_PROFILE_STAGES").contains("1")
     val jobStartNs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val stageDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    // A stage is credited to the operator in the call stack Spark
+    // records for it (StageInfo.details). Stages that AQE submits from
+    // its own thread pool record no graft frame; those take the call
+    // stack of the SQL execution (the eager action) their job runs for,
+    // or the description the timed action below sets. A job is
+    // credited like its first stage.
+    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val stageSite = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          operatorOf(x.details).foreach(execSite.put(x.executionId, _))
+        case _ =>
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("?")
-        js.stageIds.foreach(sid => stageDesc.put(sid, desc))
-        if (perJob) jobStartNs.put(js.jobId, (System.nanoTime(), desc))
+        if (perJob || perStage) {
+          val props = Option(js.properties)
+          val fallback = props
+            .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+            .flatMap(id => Option(execSite.get(id.toLong)))
+            .orElse(props.flatMap(p => Option(p.getProperty("spark.job.description"))))
+            .getOrElse("?")
+          def siteOf(si: StageInfo) = operatorOf(si.details).getOrElse(fallback)
+          js.stageInfos.foreach(si => stageSite.put(si.stageId, siteOf(si)))
+          if (perJob) jobStartNs.put(js.jobId, (System.nanoTime(),
+            js.stageInfos.minByOption(_.stageId).map(siteOf).getOrElse(fallback)))
+        }
       }
       override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
         if (perJob) Option(jobStartNs.remove(je.jobId)).foreach { case (t0, site) =>
@@ -58,22 +89,15 @@ object Profile {
         tasks.addAndGet(sc.stageInfo.numTasks)
         taskTimeMs.addAndGet(
           sc.stageInfo.taskMetrics.executorRunTime)
-        // GRAFT_PROFILE_STAGES=1: attribute each stage to the first
-        // graft.* frame of its call site so a chain's cost decomposes
-        // to the operator that submitted it.
-        if (sys.env.get("GRAFT_PROFILE_STAGES").contains("1")) {
-          val site = Option(stageDesc.get(sc.stageInfo.stageId))
-            .filter(_ != "?")
-            .orElse(sc.stageInfo.details.linesIterator
-              .find(l => l.contains("graft.") && !l.contains("graft.Profile"))
-              .map(_.trim))
-            .getOrElse("?")
+        // GRAFT_PROFILE_STAGES=1: one line per stage with its operator,
+        // so a chain's cost decomposes by operator.
+        if (perStage) {
           val wallMs = (for {
             s <- sc.stageInfo.submissionTime; e <- sc.stageInfo.completionTime
           } yield e - s).getOrElse(-1L)
           println(s"[stage] id=${sc.stageInfo.stageId} wall=${wallMs}ms " +
             s"taskTime=${sc.stageInfo.taskMetrics.executorRunTime}ms " +
-            s"tasks=${sc.stageInfo.numTasks} site=$site")
+            s"tasks=${sc.stageInfo.numTasks} site=${stageSite.getOrDefault(sc.stageInfo.stageId, "?")}")
         }
       }
     })
@@ -92,7 +116,10 @@ object Profile {
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val tBuilt = System.nanoTime()
+        // the final plan's jobs carry no operator frame: name them here
+        spark.sparkContext.setJobDescription(s"$name final plan")
         df.queryExecution.toRdd.count()
+        spark.sparkContext.setJobDescription(null)
         val t1 = System.nanoTime()
         // listener events are async; a short quiesce keeps the counters
         // attributable to this run (diagnostic precision, not contract)

@@ -125,48 +125,6 @@ object ConnectedComponents {
     *         after `maxIter` rounds (the theoretical bound is
     *         O(log² n); 50 covers any feasible input — non-convergence
     *         means corrupted edge data, not a tuning problem). */
-  /** A star round submitted concurrently in its own cancelable job
-    * group (guide §2.6): the convergence probe and the next round both
-    * read only the just-checkpointed edge frame, so the round runs
-    * while the probe does. If the probe reports convergence the round
-    * is cancelled — waste bounded by the stages it started during the
-    * probe (at scale: one map stage of the SMALLEST, converged edge
-    * frame) — otherwise its result is adopted with the probe latency
-    * fully off the critical path. The body's plan and result are
-    * bit-identical to the sequential form; only the submitting thread
-    * changes. Failure hygiene (the r16 teardown-race lesson): the
-    * thread is never interrupted — cancellation goes through
-    * `cancelJobGroup` and the result is always drained before control
-    * returns, so no orphaned action races context teardown. */
-  private final class SpeculativeRound(
-      sc: org.apache.spark.SparkContext, body: () => DataFrame) {
-    private val group = s"graft-cc-spec-${java.util.UUID.randomUUID()}"
-    private val result = new java.util.concurrent.CompletableFuture[DataFrame]()
-    private val thread = new Thread(() => {
-      try {
-        sc.setJobGroup(group, "cc speculative star round",
-          interruptOnCancel = false)
-        result.complete(body())
-      } catch { case t: Throwable => result.completeExceptionally(t) }
-      finally sc.clearJobGroup()
-    }, group)
-    thread.setDaemon(true)
-    thread.start()
-    /** Adopt the round (rethrowing its own failure, unwrapped). */
-    def await(): DataFrame =
-      try result.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    /** Cancel and drain: after this returns the scheduler is quiescent
-      * with respect to this round (its jobs are cancelled or done). */
-    def cancelAndDrain(): Unit = {
-      sc.cancelJobGroup(group)
-      try { result.get(); () } catch { case _: Throwable => () }
-      thread.join(60000L)
-    }
-  }
-
   def components(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     componentsRuns.incrementAndGet()
     val Seq(ac, bc) = pairs.columns.take(2).toSeq
@@ -175,27 +133,12 @@ object ConnectedComponents {
       .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
       .distinct())
-    val sc = edges.sparkSession.sparkContext
-    def speculate(cur: DataFrame): SpeculativeRound =
-      new SpeculativeRound(sc,
-        () => Dedup.materialize(smallStar(largeStar(cur))))
-    var converged = false
+    var converged = isStarForest(edges)
     var rounds = 0
-    // Pipeline the probe with the next round (§2.6): both depend only
-    // on the checkpointed `edges`, so each round is speculated while
-    // its predecessor's convergence probe runs; a converged probe
-    // cancels the in-flight speculation.
-    var spec: SpeculativeRound = speculate(edges)
-    try {
+    while (!converged && rounds < maxIter) {
+      edges = Dedup.materialize(smallStar(largeStar(edges)))
       converged = isStarForest(edges)
-      while (!converged && rounds < maxIter) {
-        edges = spec.await()
-        rounds += 1
-        spec = speculate(edges)
-        converged = isStarForest(edges)
-      }
-    } finally {
-      if (spec != null) spec.cancelAndDrain()
+      rounds += 1
     }
     if (!converged)
       throw new IllegalStateException(

@@ -38,27 +38,9 @@ object Dedup {
     * checkpoint dir's lifecycle — [[withScopedCheckpoint]] makes that
     * contract self-enforcing; otherwise each call leaves its
     * checkpointed frames on disk. */
-  def materialize(df: DataFrame): DataFrame = {
-    // Label the eager jobs with the caller (guide §1.5): every eager
-    // chain funnels through here, so the UI / profile listener can
-    // attribute each AQE stage job to the operator that submitted it.
-    // Thread-local, restored after; no effect on results.
-    val sc = df.sparkSession.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    val site = Thread.currentThread.getStackTrace
-      .find { f =>
-        val c = f.getClassName
-        c.startsWith("graft.") && !c.startsWith("graft.operators.Dedup") &&
-          !c.startsWith("graft.operators.Par")
-      }
-      .map(f => s"${f.getClassName.stripPrefix("graft.")}.${f.getMethodName}")
-      .getOrElse("Dedup.materialize")
-    sc.setJobDescription(s"materialize @ $site")
-    try {
-      if (sc.getCheckpointDir.isDefined) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    } finally sc.setJobDescription(prev)
-  }
+  def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+    else df.localCheckpoint(true)
 
   /** Scope reliable-checkpoint files to `body`: checkpoints land in a
     * fresh subdirectory of the session's current (resolved) checkpoint

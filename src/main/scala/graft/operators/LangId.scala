@@ -671,44 +671,9 @@ object LangId {
       trainPermille: Int = 500, buckets: Int = 8192,
       salt: String = "graft", arrivalSalt: String = "arrivals",
       alertQ: Long = 32L): DataFrame = {
-    require(newPermille >= 0 && newPermille <= 1000,
-      s"newPermille must be in [0,1000], got $newPermille")
-    graft.GraftSession.ensureConfs(docs.sparkSession)
-    val flagged = Sampling.withSplitBucket(docs, "doc_id", arrivalSalt)
-    val standing = flagged.filter(col("__bucket") >= newPermille)
-      .drop("__bucket")
-    val incoming = flagged.filter(col("__bucket") < newPermille)
-      .drop("__bucket")
-    // The standing-model chain (hb census → consts/sheet → baseline
-    // row) and the arrival slice's own trigram census touch disjoint
-    // corpus slices: build them concurrently (§2.6). Within the
-    // standing chain, consts feeds the baseline grid, the arrival
-    // grid AND the class support; sheet feeds both feature sums —
-    // materialize so the train chain runs once (the q167
-    // materialize-the-sheet rule), and materialize the two
-    // concurrently too (both read only the checkpointed hb census).
-    // The baseline is the persisted one-row artifact: materialized so
-    // the close's broadcast carries ONE row with no upstream lineage.
-    val Seq(stdSide, arrSide) = graft.operators.Par.run[Any](
-      () => {
-        val (meta, hb, consts0, sheet0) =
-          parts(standing, textCol, langCol, trainPermille, buckets, salt)
-        val Seq(consts, sheet) = graft.operators.Par.run[DataFrame](
-          () => Dedup.materialize(consts0),
-          () => Dedup.materialize(sheet0))
-        val base = Dedup.materialize(langDistRowOf(
-          scoredRows(meta, hb, consts, sheet, heldOutOnly = false)))
-        (consts, sheet, base)
-      },
-      // the arrival slice is a FOREIGN frame vs the standing model:
-      // reuse parts for its trigram chain (its own consts/sheet are
-      // never evaluated — lazy frames cost nothing unused)
-      () => parts(incoming, textCol, langCol, trainPermille, buckets, salt))
-    val (consts, sheet, base) = stdSide.asInstanceOf[(DataFrame, DataFrame, DataFrame)]
-    val (am, ah, _, _) =
-      arrSide.asInstanceOf[(DataFrame, DataFrame, DataFrame, DataFrame)]
-    langDistAgainst(
-      scoredRows(am, ah, consts, sheet, heldOutOnly = false),
+    val (_, arrivals, consts, base) = driftSides(docs, textCol, langCol,
+      newPermille, trainPermille, buckets, salt, arrivalSalt)
+    langDistAgainst(arrivals,
       consts.select(col("__c").as("predicted_lang")), base, alertQ)
   }
 
@@ -739,34 +704,9 @@ object LangId {
       newPermille: Int = 100, trainPermille: Int = 500,
       buckets: Int = 8192, salt: String = "graft",
       arrivalSalt: String = "arrivals"): DataFrame = {
-    require(newPermille >= 0 && newPermille <= 1000,
-      s"newPermille must be in [0,1000], got $newPermille")
-    graft.GraftSession.ensureConfs(docs.sparkSession)
-    val flagged = Sampling.withSplitBucket(docs, "doc_id", arrivalSalt)
-    val standing = flagged.filter(col("__bucket") >= newPermille)
-      .drop("__bucket")
-    val incoming = flagged.filter(col("__bucket") < newPermille)
-      .drop("__bucket")
-    // same concurrent standing-chain / arrival-census structure as
-    // [[langDistDrift]] (§2.6): the base artifact is materialized for
-    // the same reason as there — the one-row broadcast must not drag
-    // the standing chain into the nested-loop build subtree
-    val Seq(stdSide, arrSide) = graft.operators.Par.run[Any](
-      () => {
-        val (meta, hb, consts0, sheet0) =
-          parts(standing, textCol, langCol, trainPermille, buckets, salt)
-        val Seq(consts, sheet) = graft.operators.Par.run[DataFrame](
-          () => Dedup.materialize(consts0),
-          () => Dedup.materialize(sheet0))
-        val base = Dedup.materialize(langDistRowOf(
-          scoredRows(meta, hb, consts, sheet, heldOutOnly = false)))
-        (consts, sheet, base)
-      },
-      () => parts(incoming, textCol, langCol, trainPermille, buckets, salt))
-    val (consts, sheet, base) = stdSide.asInstanceOf[(DataFrame, DataFrame, DataFrame)]
-    val (am, ah, _, _) =
-      arrSide.asInstanceOf[(DataFrame, DataFrame, DataFrame, DataFrame)]
-    val scored = scoredRows(am, ah, consts, sheet, heldOutOnly = false)
+    val (incoming, arrivals, consts, base) = driftSides(docs, textCol,
+      langCol, newPermille, trainPermille, buckets, salt, arrivalSalt)
+    val scored = arrivals
       .join(incoming.select(col("doc_id"),
         coalesce(col(srcCol), lit("unknown")).as("source")), Seq("doc_id"))
     val counts = scored.groupBy(col("source"), col("predicted_lang"))
@@ -786,6 +726,58 @@ object LangId {
           coalesce(element_at(col("lmap"), col("predicted_lang")), lit(0L))
             .as("c_gb"),
           coalesce(col("t_g"), lit(0L)).as("t_g")))
+  }
+
+  /** The standing/arrival split shared by [[langDistDrift]] and
+    * [[langDistDriftBySource]]: the corpus splits on the `arrivalSalt`
+    * md5 bucket, the standing remainder trains the model and scores
+    * its own whole-corpus predictions into the baseline row, and the
+    * arrival slice scores against that model. Returns
+    * (incoming, arrival scored rows, consts, base).
+    *
+    * The standing-model chain (hb census → consts/sheet → baseline
+    * row) and the arrival slice's own trigram census touch disjoint
+    * corpus slices: build them concurrently (§2.6). Within the
+    * standing chain, consts feeds the baseline grid, the arrival
+    * grid AND the class support; sheet feeds both feature sums —
+    * materialize so the train chain runs once (the q167
+    * materialize-the-sheet rule), and materialize the two
+    * concurrently too (both read only the checkpointed hb census).
+    * The baseline is the persisted one-row artifact: materialized so
+    * the close's broadcast carries ONE row with no upstream lineage. */
+  private def driftSides(docs: DataFrame, textCol: String,
+      langCol: String, newPermille: Int, trainPermille: Int,
+      buckets: Int, salt: String, arrivalSalt: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    require(newPermille >= 0 && newPermille <= 1000,
+      s"newPermille must be in [0,1000], got $newPermille")
+    graft.GraftSession.ensureConfs(docs.sparkSession)
+    val flagged = Sampling.withSplitBucket(docs, "doc_id", arrivalSalt)
+    val standing = flagged.filter(col("__bucket") >= newPermille)
+      .drop("__bucket")
+    val incoming = flagged.filter(col("__bucket") < newPermille)
+      .drop("__bucket")
+    val Seq(Seq(consts, sheet, base), Seq(am, ah)) =
+      graft.operators.Par.run[Seq[DataFrame]](
+        () => {
+          val (meta, hb, consts0, sheet0) =
+            parts(standing, textCol, langCol, trainPermille, buckets, salt)
+          val Seq(consts, sheet) = graft.operators.Par.run[DataFrame](
+            () => Dedup.materialize(consts0),
+            () => Dedup.materialize(sheet0))
+          Seq(consts, sheet, Dedup.materialize(langDistRowOf(
+            scoredRows(meta, hb, consts, sheet, heldOutOnly = false))))
+        },
+        // the arrival slice is a FOREIGN frame vs the standing model:
+        // reuse parts for its trigram chain (its own consts/sheet are
+        // never evaluated — lazy frames cost nothing unused)
+        () => {
+          val (meta, hb, _, _) =
+            parts(incoming, textCol, langCol, trainPermille, buckets, salt)
+          Seq(meta, hb)
+        })
+    (incoming, scoredRows(am, ah, consts, sheet, heldOutOnly = false),
+      consts, base)
   }
 
   /** The per-source K-class KL closing arithmetic over a scoring grid

@@ -1279,8 +1279,7 @@ object Mixing {
   def dsirResample(docs: DataFrame, budgetPermille: Int,
       textCol: String = "text", targetPermille: Int = 100,
       buckets: Int = 8192, salt: String = "graft",
-      sampleSalt: String = "resample",
-      materializeCut: Boolean = false): DataFrame = {
+      sampleSalt: String = "resample"): DataFrame = {
     require(budgetPermille >= 0 && budgetPermille <= 1000,
       s"budgetPermille must be in [0,1000], got $budgetPermille")
     require(salt != sampleSalt,
@@ -1296,18 +1295,10 @@ object Mixing {
       val q = BigDecimal(1000 - budgetPermille) / BigDecimal(1000)
       // globalQuantileDisc always yields ONE row, even on an empty
       // corpus (NULL cut then keeps nothing — the q125 idiom).
-      // materializeCut (default OFF): the eager one-row checkpoint
-      // only pays for itself when a caller consumes the keep frame
-      // from SEVERAL places without materializing it — a single
-      // consumer (q161) or a caller that checkpoints the composed
-      // result itself (q169's release chain) re-derives nothing, and
-      // the unconditional materialize just added a construction-time
-      // job to every call
-      val cut0 = Quantiles.globalQuantileDisc(scored, "key_q",
+      val cut = Quantiles.globalQuantileDisc(scored, "key_q",
           Seq("cut" -> q.toDouble),
           materializeInput = false) // scored is already materialized
         .select(col("cut").as("__cut"))
-      val cut = if (materializeCut) Dedup.materialize(cut0) else cut0
       scored.crossJoin(broadcast(cut))
         .filter(col("key_q") > col("__cut"))
         .drop("__cut")

@@ -36,23 +36,31 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(res.values.toSet == Set(1L), "every chain member must label to the global min")
   }
 
-  test("speculative rounds leave the scheduler quiescent after cancellation") {
-    // Every components() call now speculates the next star round while
-    // the convergence probe runs and CANCELS the in-flight speculation
-    // once the probe reports a fixed point. Pin the two contracts the
-    // speculation must not break: (a) a multi-round graph still labels
-    // exactly (the adopted speculative rounds are bit-identical to the
-    // sequential form), and (b) after the final cancellation the
-    // scheduler accepts and completes new work — no orphaned action
-    // races the context (the r16 teardown-race regression class).
+  test("a multi-round chain labels exactly and leaves the scheduler free for new work") {
+    // A 32-chain needs several star rounds, each an eager checkpoint
+    // job chain: the labels must still be exact, and once components()
+    // returns the scheduler must accept and complete new work.
     val chain = (1L until 32L).map(i => (33L - i, 32L - i))
     val res = resultMap(ConnectedComponents.components(pairsDF(chain: _*)))
     assert(res.keySet == (1L to 32L).toSet)
     assert(res.values.toSet == Set(1L))
     assert(ConnectedComponents.lastRounds.get() >= 1L,
-      "a 32-chain must need at least one star round (speculation adopted)")
+      "a 32-chain must need at least one star round")
     assert(spark.range(100).selectExpr("sum(id)").head().getLong(0) == 4950L,
-      "post-cancellation job must run cleanly")
+      "a job after components() must run cleanly")
+  }
+
+  test("a round cap below convergence throws and leaves no job running") {
+    // the throw path: one round cannot collapse a 32-chain into stars
+    val chain = (1L until 32L).map(i => (33L - i, 32L - i))
+    val e = intercept[IllegalStateException] {
+      ConnectedComponents.components(pairsDF(chain: _*), maxIter = 1)
+    }
+    assert(e.getMessage.contains("did not converge after 1 rounds"))
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "no job may outlive the failed components() call")
+    assert(spark.range(100).selectExpr("sum(id)").head().getLong(0) == 4950L,
+      "a job after the failure must run cleanly")
   }
 
   test("matches brute-force union-find on random graphs") {
