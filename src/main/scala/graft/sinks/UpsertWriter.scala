@@ -1,6 +1,9 @@
 package graft.sinks
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,11 +24,14 @@ import org.apache.spark.sql.functions._
   *     (Hudi's bloom index) is out of scope; partition-level COW is the
   *     documented bound.
   *
-  * Scale notes: the merge shuffles on the record key once; reading
-  * current state is partition-pruned by the batch's touched-partition
-  * set (a `.isin` filter that Catalyst turns into partition pruning).
-  * `localCheckpoint` cuts the lineage so the overwrite doesn't read the
-  * path it is rewriting.
+  * Scale notes: the batch is parsed and precombined once, into a
+  * local checkpoint that every later step reads. The table root is
+  * listed once; only the touched partition directories that exist are
+  * listed, read and rewritten, so no step lists or scans the whole
+  * table. The merge shuffles on the record key once, and only when a
+  * touched partition already exists; otherwise the precombined batch
+  * is written as is. `localCheckpoint` cuts the lineage so the
+  * overwrite doesn't read the path it is rewriting.
   *
   * Key-partition moves: like Hudi's default (non-global) index, the
   * upsert is partition-local — a key whose `routeId` changes gets a new
@@ -53,40 +59,38 @@ object UpsertWriter {
   /** Upsert `batch` into the partitioned parquet table at `tableDir`. */
   def upsert(batch: DataFrame, tableDir: String, keys: Keys = Keys()): Unit = {
     val spark = batch.sparkSession
-    if (batch.isEmpty) return
+    // One pass over the batch: every step below reads this checkpoint.
+    val incoming = precombine(batch, keys).localCheckpoint(true)
 
-    val incoming = precombine(batch, keys).withColumn("__src", lit(1))
+    // Touched partitions, named the way the writer names their
+    // directories (escaped; null -> __HIVE_DEFAULT_PARTITION__). The set
+    // comes from the precombined batch, so upserts stay partition-local.
+    // Micro-batch-sized: the driver-side collect is bounded by batch
+    // cardinality, not table size.
+    val touched = incoming.select(col(keys.partition).cast("string")).distinct().collect()
+      .map(r => ExternalCatalogUtils.getPartitionPathString(keys.partition, r.getString(0)))
+    if (touched.isEmpty) return
 
-    // Filesystem-agnostic existence check (java.io.File would silently
-    // report false for hdfs://, s3a://, … and the merge would be skipped).
-    val hadoopPath = new org.apache.hadoop.fs.Path(tableDir)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasTable = fs.exists(hadoopPath) &&
-      fs.listStatus(hadoopPath).exists(_.getPath.getName.startsWith(s"${keys.partition}="))
+    // Filesystem-agnostic listing of the table root only (java.io.File
+    // would silently report nothing for hdfs://, s3a://, …).
+    val root = new Path(tableDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onDisk =
+      try fs.listStatus(root).map(_.getPath.getName).toSet
+      catch { case _: FileNotFoundException => Set.empty[String] }
+    val dirs = touched.filter(onDisk).map(new Path(root, _).toString)
 
-    val merged = if (hasTable) {
-      // Touched-partition set: micro-batch-sized, so the driver-side
-      // collect is bounded by batch cardinality, not table size. A null
-      // partition value needs explicit handling: isin() never matches
-      // null, which would drop the table's null-partition rows from the
-      // merge and let dynamic overwrite erase them.
-      val touched = incoming.select(keys.partition).distinct().collect().map(_.get(0))
-      val (nullTouched, nonNull) = (touched.contains(null), touched.filter(_ != null))
-      val pruned = col(keys.partition).isin(nonNull.toIndexedSeq: _*) ||
-        (lit(nullTouched) && col(keys.partition).isNull)
-      val current = spark.read.parquet(tableDir)
-        .filter(pruned)   // partition pruning
-        .select(incoming.columns.filter(_ != "__src").toIndexedSeq.map(col): _*)
+    val winners = if (dirs.isEmpty) incoming else {
+      // The batch's schema selects its columns by name from the files.
+      val current = spark.read.schema(incoming.schema).option("basePath", tableDir)
+        .parquet(dirs.toIndexedSeq: _*)
         .withColumn("__src", lit(0))
-      current.unionByName(incoming)
-    } else incoming
+      val merged = current.unionByName(incoming.withColumn("__src", lit(1)))
+      // Cut lineage: the overwrite below must not plan a scan of tableDir.
+      precombine(merged, keys, extraTiebreak = Seq("__src")).drop("__src").localCheckpoint(true)
+    }
 
-    val winners = precombine(merged, keys, extraTiebreak = Seq("__src")).drop("__src")
-
-    // Cut lineage: the overwrite below must not plan a scan of tableDir.
-    val materialized = winners.localCheckpoint(true)
-
-    materialized.write
+    winners.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(keys.partition)
