@@ -33,6 +33,23 @@ import org.apache.spark.sql.functions._
   * is written as is. `localCheckpoint` cuts the lineage so the
   * overwrite doesn't read the path it is rewriting.
   *
+  * The write is hash-clustered by the partition column, so each batch
+  * writes one file per touched partition, over `min(cores, touched)`
+  * tasks: the write uses every core, and a batch large enough to keep
+  * many record-key partitions still writes one file per partition, not
+  * one per record-key partition. The trade-off: each route's rows land
+  * in one task, so a hot route bounds the write's tail (Hudi COW has
+  * the same property per file group).
+  *
+  * Per-file cost on the local filesystem: without the native Hadoop
+  * library (`libhadoop`), `RawLocalFileSystem.setPermission` forks a
+  * `chmod` process for each data file, for its `.crc` and for each
+  * partition directory. Upserting 150 partitions into an empty table
+  * (150 data files, 150 `.crc`, 150 directories) started 965-989
+  * processes and took 2.4-2.7 s on a 4-vCPU VM at `local[2]`: ~6.5
+  * processes and ~17 ms per data file. A distributed filesystem or a
+  * native-enabled Hadoop does not pay it.
+  *
   * Key-partition moves: like Hudi's default (non-global) index, the
   * upsert is partition-local — a key whose `routeId` changes gets a new
   * row in the new partition and the stale row in the old partition is
@@ -90,7 +107,11 @@ object UpsertWriter {
       precombine(merged, keys, extraTiebreak = Seq("__src")).drop("__src").localCheckpoint(true)
     }
 
-    winners.write
+    // One task per group of partition values: every touched directory
+    // is written by exactly one task (one file each), on up to every
+    // core. By number, so AQE does not coalesce it back to one task.
+    val writers = math.min(spark.sparkContext.defaultParallelism, touched.length)
+    winners.repartition(writers, col(keys.partition)).write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(keys.partition)

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
@@ -114,35 +114,84 @@ class UpsertWriterSpec extends AnyFunSuite {
     assert(got == Set((1, 7, 100L, 1), (1, 8, 200L, 10), (2, 8, 100L, 2), (3, 9, 100L, 3), (3, 7, 300L, 30)))
   }
 
+  /** Runs `body` with `listener` attached and returns once the
+    * listener has seen every event of it: listener events arrive in
+    * order, so once a marker job submitted after `body` has been seen,
+    * every job of `body` has been seen too. */
+  private def listening(listener: SparkListener)(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val marker = "upsert-spec-marker"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val markerListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    sc.addSparkListener(markerListener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener saw no marker job")
+    } finally {
+      sc.removeSparkListener(markerListener)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("an upsert into a 40-partition table runs no table-wide file listing job") {
     // 40 > spark.sql.sources.parallelPartitionDiscovery.threshold (32):
     // listing the whole table would run a "Listing leaf files" job
     val out = tmpDir()
     UpsertWriter.upsert(frame((0 until 40).map(r => row(r, r, 100, r)): _*), out)
-    val sc = spark.sparkContext
     val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
           .foreach(descriptions.add)
-    }
-    sc.addSparkListener(listener)
-    try {
+    }) {
       UpsertWriter.upsert(frame(row(100, 3, 200, 7)), out)
-      // events arrive in order: once the marker job is seen, every
-      // job of the upsert has been seen too
-      sc.setJobDescription("upsert-listing-guard-marker")
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!descriptions.contains("upsert-listing-guard-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(descriptions.contains("upsert-listing-guard-marker"), "listener saw no marker job")
-    } finally sc.removeSparkListener(listener)
+    }
     val listings = descriptions.toArray.map(_.toString).filter(_.startsWith("Listing leaf files"))
     assert(listings.isEmpty, s"upsert listed the table: ${listings.mkString("; ")}")
     assert(partitionDirs(out).size == 40)
     val t = UpsertWriter.readTable(spark, out)
     assert(t.count() == 41 && t.select("record_id").distinct().count() == 41)
     assert(t.filter($"routeId" === 3).select("record_id").as[Int].collect().toSet == Set(3, 100))
+  }
+
+  /** Task counts of the stages of `body` that wrote output records. */
+  private def writeStageTasks(body: => Unit): Seq[Int] = {
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val writing = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.merge(e.stageId, 1, _ + _)
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0)
+          writing.add(e.stageId)
+      }
+    })(body)
+    writing.toArray.map(id => tasks.get(id.asInstanceOf[Int])).toSeq
+  }
+
+  test("a batch writes one file per touched partition, on min(cores, touched) tasks") {
+    val out = tmpDir()
+    // 40 touched routes on local[4]: one write stage of 4 tasks
+    val first = writeStageTasks(
+      UpsertWriter.upsert(frame((0 until 40).map(r => row(r, r, 100, r)): _*), out))
+    assert(first == Seq(4), s"write stage tasks: $first")
+    val dirs = partitionDirs(out)
+    assert(dirs.size == 40)
+    val before = dirs.map(d => d -> files(s"$out/$d")).toMap
+    assert(before.values.forall(_.size == 1), s"files per partition: ${before.values.map(_.size)}")
+    // a merge touching one route: one task, one new file there, the
+    // other 39 directories untouched
+    val merge = writeStageTasks(UpsertWriter.upsert(frame(row(100, 3, 200, 7)), out))
+    assert(merge == Seq(1), s"write stage tasks: $merge")
+    val route3 = files(s"$out/routeId=3")
+    assert(route3.size == 1 && route3 != before("routeId=3"))
+    assert((dirs - "routeId=3").forall(d => files(s"$out/$d") == before(d)))
+    assert(UpsertWriter.readTable(spark, out).count() == 41)
   }
 }
